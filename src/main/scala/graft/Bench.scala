@@ -107,7 +107,11 @@ object Bench {
     // contended host — the suite total should then be re-swept, not read
     // as an engine regression
     val calPost = calibrateMs(cpus.toInt)
-    val compact = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"n_failed":$nFailed,"sf":"$sfDir","cal_pre_ms":${fmt(calPre)},"cal_post_ms":${fmt(calPost)},"slowest":$slow}"""
+    // failed gates by name: the per-query line above rarely survives the
+    // tail capture, so without this a failure count has no name
+    val failed = results.collect { case (k, v) if v < 0 => "\"" + k + "\"" }
+      .mkString("[", ",", "]")
+    val compact = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"n_failed":$nFailed,"failed":$failed,"sf":"$sfDir","cal_pre_ms":${fmt(calPre)},"cal_post_ms":${fmt(calPost)},"slowest":$slow}"""
     // side artifact: the same compact JSON, readable even if stdout capture
     // mangles the tail (build.sbt's showSuccess := false keeps sbt's
     // [success] banner from displacing the line below as stdout's last)

@@ -42,7 +42,11 @@ object PlanDump {
       } catch { case e: Throwable =>
         System.err.println(s"[plandump] $name FAILED: ${e.getMessage}")
       }
-      graft.ops.CheckpointUtil.releaseAll(spark)
+      // a cleanup failure must not abort the remaining dumps either
+      try graft.ops.CheckpointUtil.releaseAll(spark)
+      catch { case e: Throwable =>
+        System.err.println(s"[plandump] $name cleanup FAILED: ${e.getMessage}")
+      }
     } finally spark.stop()
   }
 }

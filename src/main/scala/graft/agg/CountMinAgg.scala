@@ -2,9 +2,8 @@ package graft.agg
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.{TernaryLike, UnaryLike}
-import org.apache.spark.sql.graftshim.{AbstractDataType, TypeCollection}
+import org.apache.spark.sql.catalyst.trees.TernaryLike
+import org.apache.spark.sql.graftshim.AbstractDataType
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -13,15 +12,8 @@ import graft.core.CountMin
 /** Key→i64 for CMS bucketing: integrals use the raw value (the bucket mix
   * avalanches), fractionals bit-cast (−0.0 ≡ 0.0), strings/binaries
   * byte-hash — same arms and kernels as [[KmvHash]]/Hash64, so the DuckDB
-  * oracle mirrors every arm. */
+  * oracle mirrors every arm. [[AtomicKey.cmsKey]] picks the arm. */
 object CmsKey {
-  @inline def ofAny(dataType: DataType, v: Any): Long = dataType match {
-    case LongType => v.asInstanceOf[Long]
-    case DoubleType => doubleKey(v.asInstanceOf[Double])
-    case BinaryType => binaryKey(v.asInstanceOf[Array[Byte]])
-    case _ => utf8Key(v.asInstanceOf[UTF8String])
-  }
-
   // per-arm kernels, also called from generated code (CmsCount.doGenCode)
   @inline def doubleKey(d: Double): Long =
     java.lang.Double.doubleToLongBits(if (d == 0.0) 0.0 else d)
@@ -38,8 +30,8 @@ case class CountMinAgg(
     third: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[CountMin]
-  with TernaryLike[Expression] with ImplicitCastInputTypes {
+  extends BlobSketchAggregate[CountMin]
+  with TernaryLike[Expression] with ImplicitCastInputTypes with ConstantParams {
 
   def this(item: Expression, depth: Expression, width: Expression) =
     this(item, depth, width, 0, 0)
@@ -48,43 +40,23 @@ case class CountMinAgg(
 
   private lazy val depth: Int = second.eval().asInstanceOf[Number].intValue()
   private lazy val width: Int = third.eval().asInstanceOf[Number].intValue()
+  @transient private lazy val key: AtomicKey.Arm = AtomicKey.cmsKey(first.dataType)
 
-  override def inputTypes: Seq[AbstractDataType] = {
-    val itemType = first.dataType match {
-      case FloatType | DoubleType | _: DecimalType => DoubleType
-      case ByteType | ShortType | IntegerType | LongType => LongType
-      case BinaryType => BinaryType
-      case StringType => StringType
-      case _ => TypeCollection(LongType, DoubleType, StringType, BinaryType)
-    }
-    Seq(itemType, IntegerType, IntegerType)
-  }
-  override def dataType: DataType = BinaryType
+  override def codec: SketchCodec[CountMin] = CountMinCodec
+  override protected def constantParams: Seq[(String, Expression)] =
+    Seq("depth" -> second, "width" -> third)
+  override def inputTypes: Seq[AbstractDataType] =
+    Seq(AtomicKey.inputType(first.dataType), IntegerType, IntegerType)
   override def nullable: Boolean = false
   override def prettyName: String = "cms_agg"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val base = super.checkInputDataTypes()
-    if (base.isFailure) base
-    else if (!second.foldable || second.eval() == null ||
-             !third.foldable || third.eval() == null)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        "depth and width must be non-null constants")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-  }
 
   override def createAggregationBuffer(): CountMin = new CountMin(depth, width)
 
   override def update(buf: CountMin, input: InternalRow): CountMin = {
     val v = first.eval(input)
-    if (v != null) buf.add(CmsKey.ofAny(first.dataType, v))
+    if (v != null) buf.add(key(v))
     buf
   }
-
-  override def merge(b1: CountMin, b2: CountMin): CountMin = { b1.merge(b2); b1 }
-  override def eval(buf: CountMin): Any = buf.serialize()
-  override def serialize(buf: CountMin): Array[Byte] = buf.serialize()
-  override def deserialize(b: Array[Byte]): CountMin = CountMin.deserialize(b)
 
   override def withNewMutableAggBufferOffset(n: Int): CountMinAgg =
     copy(mutableAggBufferOffset = n)
@@ -92,54 +64,4 @@ case class CountMinAgg(
     copy(inputAggBufferOffset = n)
   override protected def withNewChildrenInternal(f: Expression, s: Expression,
       t: Expression): CountMinAgg = copy(first = f, second = s, third = t)
-}
-
-/** cms_merge_agg(sketch) → binary: re-aggregates stored CMS sketches. */
-case class CountMinMergeAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[CountMinMergeAgg.Holder]
-  with UnaryLike[Expression] with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "cms_merge_agg"
-
-  override def createAggregationBuffer(): CountMinMergeAgg.Holder =
-    new CountMinMergeAgg.Holder(null)
-
-  override def update(buf: CountMinMergeAgg.Holder, input: InternalRow): CountMinMergeAgg.Holder = {
-    val v = child.eval(input)
-    if (v != null) {
-      val other = CountMin.deserialize(v.asInstanceOf[Array[Byte]])
-      if (buf.s == null) buf.s = other else buf.s.merge(other)
-    }
-    buf
-  }
-
-  override def merge(b1: CountMinMergeAgg.Holder, b2: CountMinMergeAgg.Holder): CountMinMergeAgg.Holder = {
-    if (b2.s != null) { if (b1.s == null) b1.s = b2.s else b1.s.merge(b2.s) }
-    b1
-  }
-
-  override def eval(buf: CountMinMergeAgg.Holder): Any =
-    if (buf.s == null) null else buf.s.serialize()
-  override def serialize(buf: CountMinMergeAgg.Holder): Array[Byte] =
-    if (buf.s == null) Array.emptyByteArray else buf.s.serialize()
-  override def deserialize(b: Array[Byte]): CountMinMergeAgg.Holder =
-    if (b.isEmpty) new CountMinMergeAgg.Holder(null)
-    else new CountMinMergeAgg.Holder(CountMin.deserialize(b))
-
-  override def withNewMutableAggBufferOffset(n: Int): CountMinMergeAgg =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): CountMinMergeAgg =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildInternal(c: Expression): CountMinMergeAgg =
-    copy(child = c)
-}
-
-object CountMinMergeAgg {
-  final class Holder(var s: CountMin) extends Serializable
 }

@@ -2,11 +2,9 @@ package graft.agg
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
-import org.apache.spark.sql.graftshim.{AbstractDataType, TypeCollection}
+import org.apache.spark.sql.catalyst.trees.BinaryLike
+import org.apache.spark.sql.graftshim.AbstractDataType
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.Hll
 
@@ -20,35 +18,20 @@ case class HllAgg(
     right: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Hll]
-  with BinaryLike[Expression] with ImplicitCastInputTypes {
+  extends BlobSketchAggregate[Hll]
+  with BinaryLike[Expression] with ImplicitCastInputTypes with ConstantParams {
 
   def this(value: Expression) = this(value, Literal(12))
 
   private lazy val p: Int = right.eval().asInstanceOf[Number].intValue()
+  @transient private lazy val hash: AtomicKey.Arm = AtomicKey.kmvHash(left.dataType)
 
-  override def inputTypes: Seq[AbstractDataType] = {
-    val valueType = left.dataType match {
-      case FloatType | DoubleType | _: DecimalType => DoubleType
-      case ByteType | ShortType | IntegerType | LongType => LongType
-      case BinaryType => BinaryType
-      case StringType => StringType
-      case _ => TypeCollection(LongType, DoubleType, StringType, BinaryType)
-    }
-    Seq(valueType, IntegerType)
-  }
-  override def dataType: DataType = BinaryType
+  override def codec: SketchCodec[Hll] = HllCodec
+  override protected def constantParams: Seq[(String, Expression)] = Seq("precision" -> right)
+  override def inputTypes: Seq[AbstractDataType] =
+    Seq(AtomicKey.inputType(left.dataType), IntegerType)
   override def nullable: Boolean = false
   override def prettyName: String = "hll_agg"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val base = super.checkInputDataTypes()
-    if (base.isFailure) base
-    else if (!right.foldable || right.eval() == null)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        "precision must be a non-null constant")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-  }
 
   override def createAggregationBuffer(): Hll = {
     if (p < 4 || p > 16)
@@ -58,22 +41,9 @@ case class HllAgg(
 
   override def update(buf: Hll, input: InternalRow): Hll = {
     val v = left.eval(input)
-    if (v != null) {
-      val h = left.dataType match {
-        case LongType => KmvHash.ofLong(v.asInstanceOf[Long])
-        case DoubleType => KmvHash.ofDouble(v.asInstanceOf[Double])
-        case BinaryType => KmvHash.ofBytes(v.asInstanceOf[Array[Byte]])
-        case _ => KmvHash.ofBytes(v.asInstanceOf[UTF8String].getBytes)
-      }
-      buf.add(h)
-    }
+    if (v != null) buf.add(hash(v))
     buf
   }
-
-  override def merge(b1: Hll, b2: Hll): Hll = { b1.merge(b2); b1 }
-  override def eval(buf: Hll): Any = buf.serialize()
-  override def serialize(buf: Hll): Array[Byte] = buf.serialize()
-  override def deserialize(b: Array[Byte]): Hll = Hll.deserialize(b)
 
   override def withNewMutableAggBufferOffset(n: Int): HllAgg =
     copy(mutableAggBufferOffset = n)
@@ -81,57 +51,4 @@ case class HllAgg(
     copy(inputAggBufferOffset = n)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): HllAgg =
     copy(left = l, right = r)
-}
-
-/** hll_merge_agg(sketch) → binary: re-aggregates stored HLL sketches
-  * (persist → read → union, same shape as kmv_merge_agg). */
-case class HllMergeAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[HllMergeAgg.Holder]
-  with UnaryLike[Expression] with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "hll_merge_agg"
-
-  override def createAggregationBuffer(): HllMergeAgg.Holder =
-    new HllMergeAgg.Holder(null)
-
-  override def update(buf: HllMergeAgg.Holder,
-      input: InternalRow): HllMergeAgg.Holder = {
-    val v = child.eval(input)
-    if (v != null) {
-      val other = Hll.deserialize(v.asInstanceOf[Array[Byte]])
-      if (buf.s == null) buf.s = other else buf.s.merge(other)
-    }
-    buf
-  }
-
-  override def merge(b1: HllMergeAgg.Holder,
-      b2: HllMergeAgg.Holder): HllMergeAgg.Holder = {
-    if (b2.s != null) { if (b1.s == null) b1.s = b2.s else b1.s.merge(b2.s) }
-    b1
-  }
-
-  override def eval(buf: HllMergeAgg.Holder): Any =
-    if (buf.s == null) null else buf.s.serialize()
-  override def serialize(buf: HllMergeAgg.Holder): Array[Byte] =
-    if (buf.s == null) Array.emptyByteArray else buf.s.serialize()
-  override def deserialize(b: Array[Byte]): HllMergeAgg.Holder =
-    if (b.isEmpty) new HllMergeAgg.Holder(null)
-    else new HllMergeAgg.Holder(Hll.deserialize(b))
-
-  override def withNewMutableAggBufferOffset(n: Int): HllMergeAgg =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): HllMergeAgg =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildInternal(c: Expression): HllMergeAgg =
-    copy(child = c)
-}
-
-object HllMergeAgg {
-  final class Holder(var s: Hll)
 }

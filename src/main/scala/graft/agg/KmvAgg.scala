@@ -2,11 +2,9 @@ package graft.agg
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
-import org.apache.spark.sql.graftshim.{AbstractDataType, TypeCollection}
+import org.apache.spark.sql.catalyst.trees.BinaryLike
+import org.apache.spark.sql.graftshim.AbstractDataType
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.KmvSketch
 import graft.expr.TextHash
@@ -31,40 +29,20 @@ case class KmvAgg(
     right: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KmvSketch]
-  with BinaryLike[Expression] with ImplicitCastInputTypes {
+  extends BlobSketchAggregate[KmvSketch]
+  with BinaryLike[Expression] with ImplicitCastInputTypes with ConstantParams {
 
   def this(value: Expression) = this(value, Literal(1024))
 
   private lazy val k: Int = right.eval().asInstanceOf[Number].intValue()
+  @transient private lazy val hash: AtomicKey.Arm = AtomicKey.kmvHash(left.dataType)
 
-  /** Route the value to the hash arm matching its SQL distinctness
-    * semantics: fractional numerics widen to Double (a TypeCollection
-    * would implicit-cast a float/decimal to the FIRST numeric member —
-    * LongType — truncating 1.1/1.2/1.9 to one distinct value), integrals
-    * widen to Long, strings/binaries stay byte-hashed. */
-  override def inputTypes: Seq[AbstractDataType] = {
-    val valueType = left.dataType match {
-      case FloatType | DoubleType | _: DecimalType => DoubleType
-      case ByteType | ShortType | IntegerType | LongType => LongType
-      case BinaryType => BinaryType
-      case StringType => StringType
-      case _ => TypeCollection(LongType, DoubleType, StringType, BinaryType)
-    }
-    Seq(valueType, IntegerType)
-  }
-  override def dataType: DataType = BinaryType
+  override def codec: SketchCodec[KmvSketch] = KmvCodec
+  override protected def constantParams: Seq[(String, Expression)] = Seq("k" -> right)
+  override def inputTypes: Seq[AbstractDataType] =
+    Seq(AtomicKey.inputType(left.dataType), IntegerType)
   override def nullable: Boolean = false
   override def prettyName: String = "kmv_agg"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val base = super.checkInputDataTypes()
-    if (base.isFailure) base
-    else if (!right.foldable || right.eval() == null)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        "k must be a non-null constant")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-  }
 
   override def createAggregationBuffer(): KmvSketch = {
     if (k < 2 || k > (1 << 20))
@@ -74,22 +52,9 @@ case class KmvAgg(
 
   override def update(buf: KmvSketch, input: InternalRow): KmvSketch = {
     val v = left.eval(input)
-    if (v != null) {
-      val h = left.dataType match {
-        case LongType => KmvHash.ofLong(v.asInstanceOf[Long])
-        case DoubleType => KmvHash.ofDouble(v.asInstanceOf[Double])
-        case BinaryType => KmvHash.ofBytes(v.asInstanceOf[Array[Byte]])
-        case _ => KmvHash.ofBytes(v.asInstanceOf[UTF8String].getBytes)
-      }
-      buf.add(h)
-    }
+    if (v != null) buf.add(hash(v))
     buf
   }
-
-  override def merge(b1: KmvSketch, b2: KmvSketch): KmvSketch = { b1.merge(b2); b1 }
-  override def eval(buf: KmvSketch): Any = buf.serialize()
-  override def serialize(buf: KmvSketch): Array[Byte] = buf.serialize()
-  override def deserialize(b: Array[Byte]): KmvSketch = KmvSketch.deserialize(b)
 
   override def withNewMutableAggBufferOffset(n: Int): KmvAgg =
     copy(mutableAggBufferOffset = n)
@@ -97,55 +62,4 @@ case class KmvAgg(
     copy(inputAggBufferOffset = n)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): KmvAgg =
     copy(left = l, right = r)
-}
-
-/** kmv_merge_agg(sketch) → binary: re-aggregates stored KMV sketches
-  * (persist → read → union, same shape as tdigest_merge_agg). */
-case class KmvMergeAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KmvMergeAgg.Holder]
-  with UnaryLike[Expression] with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "kmv_merge_agg"
-
-  override def createAggregationBuffer(): KmvMergeAgg.Holder =
-    new KmvMergeAgg.Holder(null)
-
-  override def update(buf: KmvMergeAgg.Holder, input: InternalRow): KmvMergeAgg.Holder = {
-    val v = child.eval(input)
-    if (v != null) {
-      val other = KmvSketch.deserialize(v.asInstanceOf[Array[Byte]])
-      if (buf.s == null) buf.s = other else buf.s.merge(other)
-    }
-    buf
-  }
-
-  override def merge(b1: KmvMergeAgg.Holder, b2: KmvMergeAgg.Holder): KmvMergeAgg.Holder = {
-    if (b2.s != null) { if (b1.s == null) b1.s = b2.s else b1.s.merge(b2.s) }
-    b1
-  }
-
-  override def eval(buf: KmvMergeAgg.Holder): Any =
-    if (buf.s == null) null else buf.s.serialize()
-  override def serialize(buf: KmvMergeAgg.Holder): Array[Byte] =
-    if (buf.s == null) Array.emptyByteArray else buf.s.serialize()
-  override def deserialize(b: Array[Byte]): KmvMergeAgg.Holder =
-    if (b.isEmpty) new KmvMergeAgg.Holder(null)
-    else new KmvMergeAgg.Holder(KmvSketch.deserialize(b))
-
-  override def withNewMutableAggBufferOffset(n: Int): KmvMergeAgg =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): KmvMergeAgg =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildInternal(c: Expression): KmvMergeAgg =
-    copy(child = c)
-}
-
-object KmvMergeAgg {
-  final class Holder(var s: KmvSketch) extends Serializable
 }

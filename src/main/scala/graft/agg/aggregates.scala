@@ -20,6 +20,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * O(groups × sketch size) — row-count independent — which is what makes the
   * design hold at 100 TB (SURVEY.md §7.4 item 9). Spill safety comes from the
   * sort-based fallback (spark.sql.objectHashAggregate.sortBased.fallbackThreshold).
+  *
+  * Every sketch has one [[SketchCodec]] (bytes in, bytes out, merge, SQL
+  * name). An add aggregate mixes in [[SketchAggregate]] (or
+  * [[BlobSketchAggregate]] when its result is the sketch) and writes only its
+  * parameters and its per-row `update`; merge / serialize / deserialize come
+  * from the codec. Every binary `*_merge_agg` is one [[SketchMergeAgg]] over
+  * a codec. A new sketch is therefore one codec, one add aggregate and one
+  * `SketchMergeAgg(child, codec)` line in the function registry.
   */
 object StatsStruct {
   val schema: StructType = StructType(Seq(
@@ -61,11 +69,12 @@ case class SummaryStatsAgg(
     right: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[MomentsSketch]
+  extends SketchAggregate[MomentsSketch]
   with BinaryLike[Expression] with ImplicitCastInputTypes {
 
   def this(child: Expression) = this(child, Literal(1L))
 
+  override def codec: SketchCodec[MomentsSketch] = MomentsCodec
   override def inputTypes: Seq[AbstractDataType] = Seq(DoubleType, LongType)
   override def dataType: DataType = StatsStruct.schema
   override def nullable: Boolean = false
@@ -86,13 +95,7 @@ case class SummaryStatsAgg(
     buf
   }
 
-  override def merge(b1: MomentsSketch, b2: MomentsSketch): MomentsSketch = {
-    b1.merge(b2); b1
-  }
-
   override def eval(buf: MomentsSketch): Any = StatsStruct.toRow(buf)
-  override def serialize(buf: MomentsSketch): Array[Byte] = buf.serialize()
-  override def deserialize(b: Array[Byte]): MomentsSketch = MomentsSketch.deserialize(b)
 
   override def withNewMutableAggBufferOffset(n: Int): SummaryStatsAgg =
     copy(mutableAggBufferOffset = n)
@@ -108,8 +111,9 @@ case class StatsMergeAgg(
     child: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[MomentsSketch] with UnaryLike[Expression] {
+  extends SketchAggregate[MomentsSketch] with UnaryLike[Expression] {
 
+  override def codec: SketchCodec[MomentsSketch] = MomentsCodec
   override def dataType: DataType = StatsStruct.schema
   override def nullable: Boolean = false
   override def prettyName: String = "stats_merge_agg"
@@ -134,12 +138,7 @@ case class StatsMergeAgg(
     buf
   }
 
-  override def merge(b1: MomentsSketch, b2: MomentsSketch): MomentsSketch = {
-    b1.merge(b2); b1
-  }
   override def eval(buf: MomentsSketch): Any = StatsStruct.toRow(buf)
-  override def serialize(buf: MomentsSketch): Array[Byte] = buf.serialize()
-  override def deserialize(b: Array[Byte]): MomentsSketch = MomentsSketch.deserialize(b)
   override def withNewMutableAggBufferOffset(n: Int): StatsMergeAgg =
     copy(mutableAggBufferOffset = n)
   override def withNewInputAggBufferOffset(n: Int): StatsMergeAgg =
@@ -156,8 +155,8 @@ case class TDigestAgg(
     third: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TDigest]
-  with TernaryLike[Expression] with ImplicitCastInputTypes {
+  extends BlobSketchAggregate[TDigest]
+  with TernaryLike[Expression] with ImplicitCastInputTypes with ConstantParams {
 
   def this(child: Expression) = this(child, Literal(1.0), Literal(100.0))
   def this(child: Expression, weight: Expression) = this(child, weight, Literal(100.0))
@@ -165,19 +164,11 @@ case class TDigestAgg(
   private lazy val compression: Double =
     third.eval().asInstanceOf[Number].doubleValue()
 
+  override def codec: SketchCodec[TDigest] = TDigestCodec
+  override protected def constantParams: Seq[(String, Expression)] = Seq("compression" -> third)
   override def inputTypes: Seq[AbstractDataType] = Seq(DoubleType, DoubleType, DoubleType)
-  override def dataType: DataType = BinaryType
   override def nullable: Boolean = false
   override def prettyName: String = "tdigest"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val base = super.checkInputDataTypes()
-    if (base.isFailure) base
-    else if (!third.foldable)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        "compression must be a constant")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-  }
 
   override def createAggregationBuffer(): TDigest = TDigest(compression)
 
@@ -196,11 +187,6 @@ case class TDigestAgg(
     buf
   }
 
-  override def merge(b1: TDigest, b2: TDigest): TDigest = { b1.merge(b2); b1 }
-  override def eval(buf: TDigest): Any = buf.serialize()
-  override def serialize(buf: TDigest): Array[Byte] = buf.serialize()
-  override def deserialize(b: Array[Byte]): TDigest = TDigest.deserialize(b)
-
   override def withNewMutableAggBufferOffset(n: Int): TDigestAgg =
     copy(mutableAggBufferOffset = n)
   override def withNewInputAggBufferOffset(n: Int): TDigestAgg =
@@ -208,59 +194,6 @@ case class TDigestAgg(
   override protected def withNewChildrenInternal(
       f: Expression, s: Expression, t: Expression): TDigestAgg =
     copy(first = f, second = s, third = t)
-}
-
-/** Mutable holder so merge-aggregates can adopt parameters (compression,
-  * capacity, key type) from the first sketch they see. */
-final class TDigestHolder(var t: TDigest)
-
-/** tdigest_merge_agg(sketch_col) → merged sketch: re-aggregates stored
-  * t-digest sketch columns (reference merge T11). */
-case class TDigestMergeAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TDigestHolder]
-  with UnaryLike[Expression] with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "tdigest_merge_agg"
-
-  override def createAggregationBuffer(): TDigestHolder = new TDigestHolder(null)
-
-  override def update(buf: TDigestHolder, input: InternalRow): TDigestHolder = {
-    val v = child.eval(input)
-    if (v != null) {
-      val other = TDigest.deserialize(v.asInstanceOf[Array[Byte]])
-      if (buf.t == null) buf.t = other // fresh object owned by the buffer
-      else buf.t.merge(other)
-    }
-    buf
-  }
-
-  override def merge(b1: TDigestHolder, b2: TDigestHolder): TDigestHolder = {
-    if (b2.t != null) {
-      if (b1.t == null) b1.t = b2.t
-      else b1.t.merge(b2.t)
-    }
-    b1
-  }
-
-  override def eval(buf: TDigestHolder): Any =
-    if (buf.t == null) null else buf.t.serialize()
-  override def serialize(buf: TDigestHolder): Array[Byte] =
-    if (buf.t == null) Array.emptyByteArray else buf.t.serialize()
-  override def deserialize(b: Array[Byte]): TDigestHolder =
-    new TDigestHolder(if (b.isEmpty) null else TDigest.deserialize(b))
-
-  override def withNewMutableAggBufferOffset(n: Int): TDigestMergeAgg =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): TDigestMergeAgg =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildInternal(c: Expression): TDigestMergeAgg =
-    copy(child = c)
 }
 
 object SpaceSavingAgg {
@@ -283,8 +216,8 @@ case class SpaceSavingAgg(
     third: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[SpaceSavingBase]
-  with TernaryLike[Expression] with ImplicitCastInputTypes {
+  extends BlobSketchAggregate[SpaceSavingBase]
+  with TernaryLike[Expression] with ImplicitCastInputTypes with ConstantParams {
 
   def this(item: Expression) = this(item, Literal(1L), Literal(20))
   def this(item: Expression, count: Expression) = this(item, count, Literal(20))
@@ -292,26 +225,18 @@ case class SpaceSavingAgg(
   private lazy val capacity: Int = third.eval().asInstanceOf[Number].intValue()
   private lazy val tag: Byte = SpaceSavingAgg.tagFor(first.dataType)
 
+  override def codec: SketchCodec[SpaceSavingBase] = SpaceSavingCodec
+  override protected def constantParams: Seq[(String, Expression)] = Seq("capacity" -> third)
   override def inputTypes: Seq[AbstractDataType] =
     Seq(TypeCollection(LongType, DoubleType, StringType, BinaryType), LongType, IntegerType)
-  override def dataType: DataType = BinaryType
   override def nullable: Boolean = false
   override def prettyName: String = "ss_topk_agg"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val base = super.checkInputDataTypes()
-    if (base.isFailure) base
-    else if (!third.foldable)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        "capacity must be a constant")
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-  }
 
   override def createAggregationBuffer(): SpaceSavingBase = {
     if (capacity <= 0) throw new IllegalArgumentException("capacity must be > 0")
     if (tag == SpaceSaving.TagString || tag == SpaceSaving.TagBinary)
-      new SpaceSavingObj(capacity)
-    else new SpaceSavingLong(capacity)
+      new SpaceSavingObj(capacity, tag)
+    else new SpaceSavingLong(capacity, tag)
   }
 
   override def update(buf: SpaceSavingBase, input: InternalRow): SpaceSavingBase = {
@@ -338,27 +263,6 @@ case class SpaceSavingAgg(
     buf
   }
 
-  override def merge(b1: SpaceSavingBase, b2: SpaceSavingBase): SpaceSavingBase = {
-    (b1, b2) match {
-      case (a: SpaceSavingLong, b: SpaceSavingLong) => a.merge(b)
-      case (a: SpaceSavingObj, b: SpaceSavingObj) => a.merge(b)
-      case _ => throw new IllegalStateException("mismatched space-saving buffers")
-    }
-    b1
-  }
-
-  override def eval(buf: SpaceSavingBase): Any = serialize(buf)
-  override def serialize(buf: SpaceSavingBase): Array[Byte] = buf match {
-    case a: SpaceSavingLong => a.serialize(tag)
-    case a: SpaceSavingObj => a.serialize(tag)
-  }
-  override def deserialize(b: Array[Byte]): SpaceSavingBase = {
-    val tag = SpaceSaving.deserializeTag(b)
-    if (tag == SpaceSaving.TagString || tag == SpaceSaving.TagBinary)
-      SpaceSaving.deserializeObj(b)
-    else SpaceSaving.deserializeLong(b)
-  }
-
   override def withNewMutableAggBufferOffset(n: Int): SpaceSavingAgg =
     copy(mutableAggBufferOffset = n)
   override def withNewInputAggBufferOffset(n: Int): SpaceSavingAgg =
@@ -378,9 +282,10 @@ case class ExactSumAgg(
     child: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[ExactSum]
+  extends SketchAggregate[ExactSum]
   with UnaryLike[Expression] with ImplicitCastInputTypes {
 
+  override def codec: SketchCodec[ExactSum] = ExactSumCodec
   override def inputTypes: Seq[AbstractDataType] = Seq(DoubleType)
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
@@ -394,14 +299,8 @@ case class ExactSumAgg(
     buf
   }
 
-  override def merge(b1: ExactSum, b2: ExactSum): ExactSum = {
-    b1.merge(b2); b1
-  }
-
   override def eval(buf: ExactSum): Any =
     if (buf.seen == 0L) null else buf.result()
-  override def serialize(buf: ExactSum): Array[Byte] = buf.serialize()
-  override def deserialize(b: Array[Byte]): ExactSum = ExactSum.deserialize(b)
 
   override def withNewMutableAggBufferOffset(n: Int): ExactSumAgg =
     copy(mutableAggBufferOffset = n)
@@ -716,77 +615,5 @@ case class VecExactSumAgg(
   override def withNewInputAggBufferOffset(n: Int): VecExactSumAgg =
     copy(inputAggBufferOffset = n)
   override protected def withNewChildInternal(c: Expression): VecExactSumAgg =
-    copy(child = c)
-}
-
-final class SSHolder(var tag: Byte, var s: SpaceSavingBase)
-
-/** ss_merge_agg(sketch_col) → merged Space-Saving sketch (Cafaro merge S8). */
-case class SpaceSavingMergeAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[SSHolder]
-  with UnaryLike[Expression] with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "ss_merge_agg"
-
-  override def createAggregationBuffer(): SSHolder = new SSHolder(-1, null)
-
-  private def parse(b: Array[Byte]): (Byte, SpaceSavingBase) = {
-    val tag = SpaceSaving.deserializeTag(b)
-    val s: SpaceSavingBase =
-      if (tag == SpaceSaving.TagString || tag == SpaceSaving.TagBinary)
-        SpaceSaving.deserializeObj(b)
-      else SpaceSaving.deserializeLong(b)
-    (tag, s)
-  }
-
-  private def mergeInto(h: SSHolder, tag: Byte, other: SpaceSavingBase): Unit = {
-    if (h.s == null) { h.tag = tag; h.s = other }
-    else {
-      require(h.tag == tag, "All arguments to merge must have same dtype")
-      (h.s, other) match {
-        case (a: SpaceSavingLong, b: SpaceSavingLong) => a.merge(b)
-        case (a: SpaceSavingObj, b: SpaceSavingObj) => a.merge(b)
-        case _ => throw new IllegalStateException("mismatched space-saving buffers")
-      }
-    }
-  }
-
-  override def update(buf: SSHolder, input: InternalRow): SSHolder = {
-    val v = child.eval(input)
-    if (v != null) {
-      val (tag, s) = parse(v.asInstanceOf[Array[Byte]])
-      mergeInto(buf, tag, s)
-    }
-    buf
-  }
-
-  override def merge(b1: SSHolder, b2: SSHolder): SSHolder = {
-    if (b2.s != null) mergeInto(b1, b2.tag, b2.s)
-    b1
-  }
-
-  override def eval(buf: SSHolder): Any =
-    if (buf.s == null) null else serialize(buf)
-  override def serialize(buf: SSHolder): Array[Byte] =
-    if (buf.s == null) Array.emptyByteArray
-    else buf.s match {
-      case a: SpaceSavingLong => a.serialize(buf.tag)
-      case a: SpaceSavingObj => a.serialize(buf.tag)
-    }
-  override def deserialize(b: Array[Byte]): SSHolder =
-    if (b.isEmpty) new SSHolder(-1, null)
-    else { val (t, s) = parse(b); new SSHolder(t, s) }
-
-  override def withNewMutableAggBufferOffset(n: Int): SpaceSavingMergeAgg =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): SpaceSavingMergeAgg =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildInternal(c: Expression): SpaceSavingMergeAgg =
     copy(child = c)
 }

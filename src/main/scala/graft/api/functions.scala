@@ -72,7 +72,7 @@ object functions {
   def tdigest(x: Column, w: Column): Column = agg(new TDigestAgg(toExpr(x), toExpr(w)))
   def tdigest(x: Column, w: Column, compression: Double): Column =
     agg(TDigestAgg(toExpr(x), toExpr(w), Literal(compression)))
-  def tdigest_merge_agg(sketch: Column): Column = agg(TDigestMergeAgg(toExpr(sketch)))
+  def tdigest_merge_agg(sketch: Column): Column = agg(SketchMergeAgg(toExpr(sketch), TDigestCodec))
 
   def tdigest_quantile(sketch: Column, q: Double): Column =
     toColumn(TDigestQuantile(toExpr(sketch), Literal(q)))
@@ -102,7 +102,7 @@ object functions {
     agg(new SpaceSavingAgg(toExpr(item), toExpr(count)))
   def ss_topk_agg(item: Column, count: Column, capacity: Int): Column =
     agg(SpaceSavingAgg(toExpr(item), toExpr(count), Literal(capacity)))
-  def ss_merge_agg(sketch: Column): Column = agg(SpaceSavingMergeAgg(toExpr(sketch)))
+  def ss_merge_agg(sketch: Column): Column = agg(SketchMergeAgg(toExpr(sketch), SpaceSavingCodec))
 
   def ss_topk_long(sketch: Column, k: Int): Column =
     toColumn(SSTopK(toExpr(sketch), Literal(k), LongType))
@@ -125,14 +125,14 @@ object functions {
   def kmv_agg(value: Column): Column = agg(new KmvAgg(toExpr(value)))
   def kmv_agg(value: Column, k: Int): Column =
     agg(KmvAgg(toExpr(value), Literal(k)))
-  def kmv_merge_agg(sketch: Column): Column = agg(KmvMergeAgg(toExpr(sketch)))
+  def kmv_merge_agg(sketch: Column): Column = agg(SketchMergeAgg(toExpr(sketch), KmvCodec))
   def kmv_distinct(sketch: Column): Column = toColumn(KmvDistinct(toExpr(sketch)))
   def kmv_size(sketch: Column): Column = toColumn(KmvSize(toExpr(sketch)))
   // ---- Count-Min frequency sketch (beyond-reference) ----
   def cms_agg(item: Column): Column = agg(new CountMinAgg(toExpr(item)))
   def cms_agg(item: Column, depth: Int, width: Int): Column =
     agg(new CountMinAgg(toExpr(item), Literal(depth), Literal(width)))
-  def cms_merge_agg(sketch: Column): Column = agg(CountMinMergeAgg(toExpr(sketch)))
+  def cms_merge_agg(sketch: Column): Column = agg(SketchMergeAgg(toExpr(sketch), CountMinCodec))
   def cms_count(sketch: Column, item: Column): Column =
     toColumn(CmsCount(toExpr(sketch), toExpr(item)))
   def cms_total(sketch: Column): Column = toColumn(CmsTotal(toExpr(sketch)))
@@ -142,7 +142,7 @@ object functions {
   def hll_agg(value: Column): Column = agg(new HllAgg(toExpr(value)))
   def hll_agg(value: Column, p: Int): Column =
     agg(HllAgg(toExpr(value), Literal(p)))
-  def hll_merge_agg(sketch: Column): Column = agg(HllMergeAgg(toExpr(sketch)))
+  def hll_merge_agg(sketch: Column): Column = agg(SketchMergeAgg(toExpr(sketch), HllCodec))
   def hll_distinct(sketch: Column): Column =
     toColumn(HllDistinct(toExpr(sketch)))
   def hll_nonzero(sketch: Column): Column =
@@ -323,14 +323,14 @@ object GraftFunctions {
       case Seq(x, w, c) => TDigestAgg(x, w, c)
       case es => throw new IllegalArgumentException(s"tdigest takes 1-3 args, got ${es.length}")
     },
-    "tdigest_merge_agg" -> aggB { case Seq(s) => TDigestMergeAgg(s) },
+    "tdigest_merge_agg" -> aggB { case Seq(s) => SketchMergeAgg(s, TDigestCodec) },
     "ss_topk_agg" -> aggB {
       case Seq(i) => new SpaceSavingAgg(i)
       case Seq(i, c) => new SpaceSavingAgg(i, c)
       case Seq(i, c, cap) => SpaceSavingAgg(i, c, cap)
       case es => throw new IllegalArgumentException(s"ss_topk_agg takes 1-3 args, got ${es.length}")
     },
-    "ss_merge_agg" -> aggB { case Seq(s) => SpaceSavingMergeAgg(s) },
+    "ss_merge_agg" -> aggB { case Seq(s) => SketchMergeAgg(s, SpaceSavingCodec) },
     "tdigest_quantile" -> { case Seq(s, q) => TDigestQuantile(s, q) },
     "tdigest_quantiles" -> { case Seq(s, q) => TDigestQuantiles(s, q) },
     "tdigest_cdf" -> { case Seq(s, x) => TDigestCdf(s, x) },
@@ -354,12 +354,12 @@ object GraftFunctions {
       case Seq(v) => new KmvAgg(v)
       case Seq(v, k) => KmvAgg(v, k)
     },
-    "kmv_merge_agg" -> aggB { case Seq(s) => KmvMergeAgg(s) },
+    "kmv_merge_agg" -> aggB { case Seq(s) => SketchMergeAgg(s, KmvCodec) },
     "hll_agg" -> aggB {
       case Seq(v) => new HllAgg(v)
       case Seq(v, p) => HllAgg(v, p)
     },
-    "hll_merge_agg" -> aggB { case Seq(s) => HllMergeAgg(s) },
+    "hll_merge_agg" -> aggB { case Seq(s) => SketchMergeAgg(s, HllCodec) },
     "hll_distinct" -> { case Seq(s) => HllDistinct(s) },
     "hll_union" -> { case Seq(a, b) => HllUnion(a, b) },
     "hll_nonzero" -> { case Seq(s) => HllNonzero(s) },
@@ -368,7 +368,7 @@ object GraftFunctions {
       case Seq(i) => new CountMinAgg(i)
       case Seq(i, d, w) => new CountMinAgg(i, d, w)
     },
-    "cms_merge_agg" -> aggB { case Seq(s) => CountMinMergeAgg(s) },
+    "cms_merge_agg" -> aggB { case Seq(s) => SketchMergeAgg(s, CountMinCodec) },
     "exact_sum" -> aggB { case Seq(x) => ExactSumAgg(x) },
     "vec_exact_sum" -> aggB { case Seq(x) => VecExactSumAgg(x) },
     "gram_agg" -> aggB { case Seq(v) => GramAgg(v) },

@@ -26,9 +26,11 @@ import java.nio.charset.StandardCharsets
   *
   * The int64/object template split (space_saving_stubs.c.in:46-52) maps to
   * [[SpaceSavingLong]] (int64 + bit-cast float64) and [[SpaceSavingObj]]
-  * (strings / arbitrary byte keys).
+  * (strings / arbitrary byte keys). `tag` is the serialized key type
+  * (`SpaceSaving.Tag*`); it picks the arm on read and travels with the sketch,
+  * so a merge of two key types fails instead of mixing them.
   */
-abstract class SpaceSavingBase(val capacity: Int) extends Serializable {
+abstract class SpaceSavingBase(val capacity: Int, val tag: Byte) extends Serializable {
   final val NIL = -1
   var size: Int = 0
   var head: Int = NIL
@@ -146,6 +148,7 @@ abstract class SpaceSavingBase(val capacity: Int) extends Serializable {
     * space_saving_stubs.c.in:289-364). `other` is not mutated. One shared
     * implementation for both key arms. */
   final def mergeBase(other: SpaceSavingBase): Unit = {
+    require(tag == other.tag, "All arguments to merge must have same dtype")
     if (other.size == 0) return
     val m1 = minOffset
     val m2 = other.minOffset
@@ -196,10 +199,16 @@ abstract class SpaceSavingBase(val capacity: Int) extends Serializable {
     while (c < n) { out(c) = i; i = next(i); c += 1 }
     out
   }
+
+  /** serialized form under key-type tag `tag` */
+  def serialize(tag: Byte): Array[Byte]
+  final def serialize(): Array[Byte] = serialize(tag)
 }
 
 /** Space-Saving over int64 keys (also carries bit-cast float64 keys). */
-final class SpaceSavingLong(capacity0: Int) extends SpaceSavingBase(capacity0) {
+final class SpaceSavingLong(capacity0: Int, tag0: Byte = SpaceSaving.TagLong)
+    extends SpaceSavingBase(capacity0, tag0) {
+  require(tag == SpaceSaving.TagLong || tag == SpaceSaving.TagDouble, s"not an int64 key tag: $tag")
   val items = new Array[Long](capacity)
   // open-addressing item→slot index; tables are tiny (≤ ~4·capacity slots)
   private val mask = {
@@ -330,7 +339,9 @@ final class SpaceSavingLong(capacity0: Int) extends SpaceSavingBase(capacity0) {
 
 /** Space-Saving over arbitrary reference keys (strings, byte arrays as
   * Base64-stable strings). Mirrors the reference `object` template arm. */
-final class SpaceSavingObj(capacity0: Int) extends SpaceSavingBase(capacity0) {
+final class SpaceSavingObj(capacity0: Int, tag0: Byte = SpaceSaving.TagString)
+    extends SpaceSavingBase(capacity0, tag0) {
+  require(tag == SpaceSaving.TagString || tag == SpaceSaving.TagBinary, s"not an object key tag: $tag")
   val items = new Array[String](capacity)
   private val index = new java.util.HashMap[String, Integer](capacity * 2)
 
@@ -438,15 +449,22 @@ object SpaceSaving {
     tag
   }
 
+  /** Either arm, chosen by the key-type tag; the inverse of
+    * [[SpaceSavingBase.serialize()]]. */
+  def deserialize(bytes: Array[Byte]): SpaceSavingBase = {
+    val tag = deserializeTag(bytes)
+    if (tag == TagString || tag == TagBinary) deserializeObj(bytes) else deserializeLong(bytes)
+  }
+
   def deserializeLong(bytes: Array[Byte]): SpaceSavingLong = {
-    deserializeTag(bytes)
+    val tag = deserializeTag(bytes)
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     bb.get() // tag
     val cap = bb.getInt()
     val n = bb.getInt()
     require(cap > 0 && n >= 0 && n <= cap && bytes.length == 9 + 24 * n,
       s"corrupt space-saving sketch: capacity=$cap size=$n in ${bytes.length} bytes")
-    val s = new SpaceSavingLong(cap)
+    val s = new SpaceSavingLong(cap, tag)
     val its = new Array[Long](n); val cts = new Array[Long](n); val ers = new Array[Long](n)
     var i = 0
     while (i < n) { its(i) = bb.getLong(); cts(i) = bb.getLong(); ers(i) = bb.getLong(); i += 1 }
@@ -464,7 +482,7 @@ object SpaceSaving {
     val n = bb.getInt()
     require(cap > 0 && n >= 0 && n <= cap,
       s"corrupt space-saving sketch: capacity=$cap size=$n")
-    val s = new SpaceSavingObj(cap)
+    val s = new SpaceSavingObj(cap, tag)
     val its = new Array[String](n); val cts = new Array[Long](n); val ers = new Array[Long](n)
     var i = 0
     while (i < n) {

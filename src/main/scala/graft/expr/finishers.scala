@@ -203,26 +203,25 @@ case class SSTopK(left: Expression, right: Expression, itemType: DataType)
     require(expected == itemType,
       s"sketch holds ${expected.simpleString} items; use the matching " +
         s"ss_topk variant (got ${itemType.simpleString})")
-    val rows: Array[Any] = if (tag == SpaceSaving.TagString || tag == SpaceSaving.TagBinary) {
-      val s = SpaceSaving.deserializeObj(bytes)
-      s.topkSlots(k).map { i =>
-        val r = new GenericInternalRow(3)
-        if (itemType == BinaryType) r.update(0, SpaceSaving.keyToBinary(s.items(i)))
-        else r.update(0, UTF8String.fromString(s.items(i)))
-        r.setLong(1, s.counts(i)); r.setLong(2, s.errors(i))
-        r: Any
-      }
-    } else {
-      val s = SpaceSaving.deserializeLong(bytes)
-      s.topkSlots(k).map { i =>
-        val r = new GenericInternalRow(3)
-        if (tag == SpaceSaving.TagDouble && itemType == DoubleType)
-          r.setDouble(0, SpaceSaving.keyToDouble(s.items(i)))
-        else if (itemType == DoubleType) r.setDouble(0, s.items(i).toDouble)
-        else r.setLong(0, s.items(i))
-        r.setLong(1, s.counts(i)); r.setLong(2, s.errors(i))
-        r: Any
-      }
+    val rows: Array[Any] = SpaceSaving.deserialize(bytes) match {
+      case s: SpaceSavingObj =>
+        s.topkSlots(k).map { i =>
+          val r = new GenericInternalRow(3)
+          if (itemType == BinaryType) r.update(0, SpaceSaving.keyToBinary(s.items(i)))
+          else r.update(0, UTF8String.fromString(s.items(i)))
+          r.setLong(1, s.counts(i)); r.setLong(2, s.errors(i))
+          r: Any
+        }
+      case s: SpaceSavingLong =>
+        s.topkSlots(k).map { i =>
+          val r = new GenericInternalRow(3)
+          if (tag == SpaceSaving.TagDouble && itemType == DoubleType)
+            r.setDouble(0, SpaceSaving.keyToDouble(s.items(i)))
+          else if (itemType == DoubleType) r.setDouble(0, s.items(i).toDouble)
+          else r.setLong(0, s.items(i))
+          r.setLong(1, s.counts(i)); r.setLong(2, s.errors(i))
+          r: Any
+        }
     }
     new GenericArrayData(rows)
   }
@@ -252,11 +251,7 @@ case class SSSize(child: Expression)
   override def dataType: DataType = IntegerType
   override def prettyName: String = "ss_size"
   override protected def nullSafeEval(sketch: Any): Any = {
-    val bytes = sketch.asInstanceOf[Array[Byte]]
-    val tag = SpaceSaving.deserializeTag(bytes)
-    if (tag == SpaceSaving.TagString || tag == SpaceSaving.TagBinary)
-      SpaceSaving.deserializeObj(bytes).size
-    else SpaceSaving.deserializeLong(bytes).size
+    SpaceSaving.deserialize(sketch.asInstanceOf[Array[Byte]]).size
   }
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }

@@ -35,10 +35,12 @@ private[graft] object CheckpointUtil {
     * (round-14: q51–q57 ran 5–11× slower at the END of the 32-core sweep but
     * were normal at 8 cores and normal in isolation). Safe between gates:
     * every cross-gate memo in SparkEntry is a disk path or plain value,
-    * never a DataFrame, so nothing re-reads a freed block. */
+    * never a DataFrame, so nothing re-reads a freed block. Blocking: every
+    * caller runs between gates, outside the timers, so block removal must
+    * finish here rather than spill into the next gate's timed window. */
   def releaseAll(spark: org.apache.spark.sql.SparkSession): Unit = {
     quietRddLogs
     spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
+      .foreach(_.unpersist(blocking = true))
   }
 }

@@ -86,12 +86,22 @@ class KmvAggSpec extends SparkTestBase {
     // -0.0 == 0.0 per SQL DISTINCT semantics
     val z = Seq(0.0, -0.0, 1.0).toDF("v")
     assert(z.agg(gf.kmv_distinct(gf.kmv_agg(col("v"), 64))).head().getDouble(0) == 2.0)
-    // NULL k rejected at analysis, not NPE at execution
+    // NULL k (and any other NULL sketch parameter) rejected at analysis,
+    // not NPE at execution
     graft.api.GraftFunctions.register(spark)
     spark.range(3).createOrReplaceTempView("__kmv_nullk")
-    val e = intercept[Exception](
-      spark.sql("SELECT kmv_agg(id, CAST(NULL AS INT)) FROM __kmv_nullk").collect())
-    assert(e.getMessage.contains("non-null constant") ||
-      e.getMessage.contains("DATATYPE_MISMATCH"))
+    Seq("kmv_agg(id, CAST(NULL AS INT))",
+        "hll_agg(id, CAST(NULL AS INT))",
+        "cms_agg(id, 4, CAST(NULL AS INT))",
+        "tdigest(CAST(id AS DOUBLE), 1.0d, CAST(NULL AS DOUBLE))",
+        "ss_topk_agg(id, 1L, CAST(NULL AS INT))").foreach { call =>
+      val e = intercept[Exception](
+        spark.sql(s"SELECT $call FROM __kmv_nullk").collect())
+      assert(e.getMessage.contains("non-null constant") ||
+        e.getMessage.contains("DATATYPE_MISMATCH"), call)
+      // analysis, not execution: the plan never gets built
+      assert(!e.isInstanceOf[NullPointerException] &&
+        !e.isInstanceOf[org.apache.spark.SparkException], s"$call: $e")
+    }
   }
 }
